@@ -27,9 +27,13 @@ AUDITS: dict[str, str] = {
     ),
     "hybrid_rrf": (
         "Both retrieval arms (cosine kNN, BM25) are bounded top-fetch_k "
-        "before the full-outer RRF fusion — the only unpartitioned windows "
-        "run over ≤fetch_k rows per arm (documented bounded usage). No "
-        "corpus-sized shuffle exists anywhere in the fused DAG."
+        "before the RRF fusion (one union of per-arm contributions + one "
+        "groupBy on doc_id) — the only unpartitioned windows run over "
+        "≤fetch_k rows per arm or the ≤Σfetch_k fused rows (documented "
+        "bounded usage). The BM25 per-doc aggregate feeds two consumers "
+        "through one exchange (ReusedExchange at run time), nothing is "
+        "persisted, and no corpus-sized shuffle exists anywhere in the "
+        "fused DAG."
     ),
     "semdedup": (
         "Fixed-centroid assignment is a scan-local argmax (centroids are "

@@ -23,7 +23,8 @@ touches only the posting lists of the query's terms (predicate pushdown on
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,36 +62,51 @@ def bm25_scores(
 
     All statistics (N, avgdl, df) are computed from the inputs — the operator
     is a pure function of its tables, so the same call works on a streamed-in
-    incremental corpus. ``df`` per term and the 1-row corpus stats broadcast.
+    incremental corpus. Repeated query terms count once per occurrence and
+    token-less documents carry no corpus mass, as in ``bm25_topk`` and
+    ``bm25_batch`` (one shared scorer with the latter).
     """
-    spark = postings.sparkSession
-    qt = spark.createDataFrame([(t,) for t in query_terms], ["term"]).distinct()
-    corpus = doc_stats.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
+    q_terms = postings.sparkSession.createDataFrame(
+        [(t, float(n)) for t, n in Counter(query_terms).items()], "term string, qtf double"
+    )
+    return _okapi(postings, doc_stats, q_terms, [], k1, b)
+
+
+def _okapi(
+    postings: DataFrame,
+    doc_stats: DataFrame,
+    q_terms: DataFrame,
+    keys: list[str],
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """(*keys, doc_id, score) from postings(doc_id, term, tf), doc_stats(doc_id,
+    dl) and query terms (*keys, term, qtf): the Okapi formula summed per query
+    term occurrence. Documents with dl = 0 are left out of N and avgdl."""
+    corpus = doc_stats.filter(F.col("dl") > 0).agg(
+        F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
     term_df = (
-        postings.join(F.broadcast(qt), "term")
+        postings.join(F.broadcast(q_terms.select("term").distinct()), "term")
         .groupBy("term")
         .agg(F.countDistinct("doc_id").cast("double").alias("df"))
     )
-    scored = (
-        postings.join(F.broadcast(qt), "term")
+    return (
+        postings.join(F.broadcast(q_terms), "term")
         .join(F.broadcast(term_df), "term")
         .join(doc_stats, "doc_id")
         .crossJoin(F.broadcast(corpus))
         .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
+            "_idf", F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
         )
         .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
+            "_ts",
+            F.col("qtf") * F.col("_idf") * (F.col("tf") * (k1 + 1.0))
             / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
         )
+        .groupBy(*keys, "doc_id")
+        .agg(F.round(F.sum("_ts"), 6).alias("score"))
     )
-    return scored.groupBy("doc_id").agg(F.round(F.sum("term_score"), 6).alias("score"))
 
 
 def bm25_topk(
@@ -115,21 +131,22 @@ def bm25_topk(
     from vectordb_bioinsight_spark.functions.text import STOPWORDS  # local to avoid cycle
 
     terms = [t for t in _tokenize_py(query) if t not in STOPWORDS]
+    if not terms:
+        return documents.select(
+            F.col(id_col).alias("doc_id"), F.lit(0.0).alias("score")
+        ).limit(0)
     tokens = documents.select(
         F.col(id_col).alias("doc_id"), F.explode(tokenize(text_col)).alias("term")
     )
     # ONE heavy aggregation: per-doc length + per-query-term tf (conditional
     # aggregates — query terms are literals, no postings join needed).
-    # Materialized once (spill-capable): both the corpus-stats aggregate and
-    # the scoring pass read it, and AQE does not reuse the exchange across
-    # the two consumers — without the persist the tokenize scan runs twice.
     per_doc = tokens.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("dl"),
         *[
             F.sum(F.when(F.col("term") == t, 1).otherwise(0)).cast("long").alias(f"_tf_{i}")
             for i, t in enumerate(terms)
         ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # ONE tiny aggregate over the per-doc table: corpus stats + per-term df.
     stats = per_doc.agg(
         F.count("*").cast("double").alias("n_docs"),
@@ -187,11 +204,6 @@ def bm25_batch(
     """
     from pyspark.sql import Window
 
-    postings = build_postings(documents, id_col, text_col)
-    stats = doc_lengths(documents, id_col, text_col)
-    corpus = stats.filter(F.col("dl") > 0).agg(
-        F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
     q_terms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -200,26 +212,13 @@ def bm25_batch(
         .groupBy("query_id", "term")
         .agg(F.count("*").cast("double").alias("qtf"))
     )
-    term_df = (
-        postings.join(F.broadcast(q_terms.select("term").distinct()), "term")
-        .groupBy("term")
-        .agg(F.countDistinct("doc_id").cast("double").alias("df"))
-    )
-    scored = (
-        postings.join(F.broadcast(q_terms), "term")
-        .join(F.broadcast(term_df), "term")
-        .join(stats, "doc_id")
-        .crossJoin(F.broadcast(corpus))
-        .withColumn(
-            "_idf", F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        )
-        .withColumn(
-            "_ts",
-            F.col("qtf") * F.col("_idf") * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("_ts"), 6).alias("score"))
+    scored = _okapi(
+        build_postings(documents, id_col, text_col),
+        doc_lengths(documents, id_col, text_col),
+        q_terms,
+        ["query_id"],
+        k1,
+        b,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -3,15 +3,18 @@
 Reciprocal Rank Fusion over N ranked retrieval arms, matching the reference's
 semantics (backend/app/core/vector_store.py:301-387): per-arm 0-based rank,
 contribution w_arm/(rrf_k + rank + 1), missing docs contribute nothing, final
-score optionally normalized to 0-100 by the max.
+score normalized to 0-100 by the max.
 
 Spark shape: rank each arm with a bounded window (arms are already top-fetch_k,
 <= dozens of rows — the unpartitioned window is over a provably tiny set),
-then FULL OUTER JOIN on doc_id and one score expression. At scale the arms are
-cheap; fusion cost is constant.
+UNION the per-arm contributions, one groupBy(doc_id).sum, then normalize by the
+max over a global window on that result (<= sum of fetch_k rows). One lazy
+plan, no joins; at scale the arms are cheap and fusion cost is constant.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -25,35 +28,25 @@ def rrf_fuse(
     score_col: str = "score",
     weights: dict[str, float] | None = None,
     rrf_k: int = RRF_K_DEFAULT,
-    normalize: bool = True,
 ) -> DataFrame:
     """Fuse ranked arms {name: DataFrame(doc_id, score)} into (doc_id, rrf_score).
 
-    Ranks are 0-based by descending score with doc_id tie-break (total order).
-    rrf_score is rounded to 6 dp for hash stability.
+    Ranks are 0-based by descending score with doc_id tie-break (total order);
+    rrf_score is normalized to 0-100 by the max and rounded to 6 dp for hash
+    stability.
     """
     weights = weights or {name: 1.0 for name in arms}
-    fused = None
-    for name, df in arms.items():
-        w = Window.orderBy(F.desc(score_col), F.asc(id_col))
-        ranked = df.select(
+    rank = Window.orderBy(F.desc(score_col), F.asc(id_col))
+    contribs = [
+        df.select(
             F.col(id_col),
-            ((F.lit(weights[name])) / (F.lit(float(rrf_k)) + F.row_number().over(w) - 1 + 1)).alias(f"_c_{name}"),
+            (F.lit(float(weights[name])) / (F.lit(float(rrf_k)) + F.row_number().over(rank))).alias("_c"),
         )
-        fused = ranked if fused is None else fused.join(ranked, id_col, "full_outer")
-    contrib_cols = [F.coalesce(F.col(f"_c_{name}"), F.lit(0.0)) for name in arms]
-    total = sum(contrib_cols[1:], contrib_cols[0])
-    out = fused.select(F.col(id_col), total.alias("rrf_raw"))
-    if normalize:
-        mx = out.agg(F.max("rrf_raw").alias("_mx"))
-        out = (
-            out.crossJoin(F.broadcast(mx))
-            .withColumn("rrf_score", F.round(F.col("rrf_raw") / F.col("_mx") * 100.0, 6))
-            .select(id_col, "rrf_score")
-        )
-    else:
-        out = out.select(F.col(id_col), F.round(F.col("rrf_raw"), 6).alias("rrf_score"))
-    return out
+        for name, df in arms.items()
+    ]
+    fused = reduce(DataFrame.unionByName, contribs).groupBy(id_col).agg(F.sum("_c").alias("_raw"))
+    top = F.max("_raw").over(Window.partitionBy())
+    return fused.select(id_col, F.round(F.col("_raw") / top * 100.0, 6).alias("rrf_score"))
 
 
 def retrieval_metrics(

@@ -3,7 +3,7 @@ the driver's ``embeddings`` + ``documents`` tables (doc_id ≡ vec_id).
 
 The hybrid-search flagship mirrors the reference's §3.1 lifecycle as ONE lazy
 DataFrame DAG: dense arm (brute-force cosine kNN) + sparse arm (BM25 subplan)
-→ RRF full-outer fusion → normalized top-k. No imperative staging — Catalyst
+→ RRF union + groupBy fusion → normalized top-k. No imperative staging — Catalyst
 sees the whole plan.
 """
 
@@ -152,8 +152,8 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the reference's weights/constant (0.6 dense / 0.4 sparse, k=60,
     normalize to 0-100; vector_store.py:301-387, config.py:157-158).
 
-    One lazy DAG: two bounded arms (fetch_k=50) → window rank → full-outer
-    join → score expression → top-10.
+    One lazy DAG: two bounded arms (fetch_k=50) → window rank → union of
+    per-arm contributions → groupBy(doc_id).sum → max-normalize → top-10.
     """
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -168,7 +168,6 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_col="score",
         weights={"dense": 0.6, "sparse": 0.4},
         rrf_k=60,
-        normalize=True,
     )
     return fused.orderBy(F.desc("rrf_score"), F.asc("doc_id")).limit(10)
 

@@ -74,11 +74,19 @@ def get_session(app_name: str = "vectordb_bioinsight_spark", cpus: int | None = 
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 32g: local mode runs the
+    whole engine in the driver JVM, and a heap larger than the host lets the
+    JVM grow until the kernel kills it instead of collecting or spilling."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(32 * 1024, max(1024, phys // 2 // 2**20))}m"
 
 
 _PKG_SHIPPED: set[int] = set()
