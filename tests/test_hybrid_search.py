@@ -1,11 +1,14 @@
-"""Hybrid search path: rrf_fuse against a pure-Python weighted RRF, the three
-BM25 entry points against each other, and the cost of one collected hybrid
-query (no persisted tables left behind, a bounded number of Spark jobs)."""
+"""Hybrid search path: knn_brute_force against numpy, rrf_fuse against a
+pure-Python weighted RRF, the three BM25 entry points against each other,
+and the cost of one hybrid query (no persisted tables left behind, a bounded
+number of Spark jobs, a bounded number of py4j round trips to build it)."""
 
 from __future__ import annotations
 
 import math
+import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +28,64 @@ ARMS = {
     "sparse": [(3, 7.0), (5, 7.0), (1, 2.5), (6, 1.0)],
     "graph": [(7, 0.3), (2, 0.3), (8, 0.2), (5, 0.1)],
 }
+
+
+def _knn_reference(rows, qv, metric):
+    """{id: score rounded to 6 dp, None where Spark yields NULL}."""
+    q = np.asarray(qv, dtype=np.float64)
+    out = {}
+    for doc_id, v in rows:
+        if v is None:
+            out[doc_id] = None
+            continue
+        a = np.asarray(v, dtype=np.float64)
+        if metric == "cosine":
+            den = float(np.linalg.norm(a)) * float(np.linalg.norm(q))
+            out[doc_id] = None if den == 0.0 else round(float(a @ q) / den, 6)
+        elif metric == "dot":
+            out[doc_id] = round(float(a @ q), 6)
+        else:
+            out[doc_id] = round(float(np.linalg.norm(a - q)), 6)
+    return out
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+@pytest.mark.parametrize("id_name", ["we`ird id", "meta.id"], ids=["backtick", "dotted"])
+def test_knn_brute_force_matches_numpy(spark, metric, id_name):
+    """Scores (6 dp) and order (score, then id) of all three metrics. Inputs
+    hold a zero-norm row (cosine NULL), a NULL embedding, exact ties (same
+    vector under two ids, the larger id first) and an id column that needs
+    backtick quoting, or a struct field reached by a dotted name."""
+    rng = random.Random(11)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(1, 13)]
+    rows += [(20, [0.0] * 8), (21, None), (31, rows[2][1]), (30, rows[2][1])]
+    qv = [rng.uniform(-1, 1) for _ in range(8)]
+    if id_name == "meta.id":
+        docs = spark.createDataFrame(
+            [((i,), v) for i, v in rows], "meta struct<id: long>, embedding array<double>"
+        )
+        out_id = "id"
+    else:
+        docs = spark.createDataFrame(rows, f"`{id_name.replace('`', '``')}` long, embedding array<double>")
+        out_id = id_name
+    got = knn_brute_force(docs, id_name, "embedding", qv, k=len(rows), metric=metric)
+    assert got.columns == [out_id, "score"]
+    got = [(r[out_id], r["score"]) for r in got.collect()]
+    want = _knn_reference(rows, qv, metric)
+    assert len(got) == len(want)
+    for doc_id, score in got:
+        if want[doc_id] is None:
+            assert score is None, (doc_id, score)
+        else:
+            assert math.isclose(score, want[doc_id], abs_tol=1e-6), (doc_id, score, want[doc_id])
+    # Spark's default null ordering: NULL scores sort last descending
+    # (cosine, dot) and first ascending (l2)
+    sign = 1.0 if metric == "l2" else -1.0
+    nulls = sorted(i for i, s in got if s is None)
+    ranked = sorted(((i, s) for i, s in got if s is not None), key=lambda r: (sign * r[1], r[0]))
+    expected_order = nulls + [i for i, _ in ranked] if metric == "l2" else [i for i, _ in ranked] + nulls
+    assert [i for i, _ in got] == expected_order
+    assert dict(got)[30] == dict(got)[31]
 
 
 def _rrf_reference(arms, weights, rrf_k):
@@ -87,19 +148,26 @@ def test_bm25_topk_without_scorable_terms_is_empty(spark, query):
 MAX_HYBRID_JOBS = 4
 
 
-def test_hybrid_query_is_one_lazy_plan(spark):
-    """No persisted table survives the query, and the query runs a bounded
-    number of jobs (one lazy plan: no eager side-work per arm)."""
-    import random
+#: py4j round trips to build one hybrid query (3 terms, 64-d query vector);
+#: composing the expressions through the Column API took ~2,200
+MAX_HYBRID_ROUND_TRIPS = 400
 
+
+def _hybrid_corpus(spark, dim):
     rng = random.Random(7)
     words = ["gene", "cancer", "protein", "pathway", "tumor", "cell", "network", "signal"]
     rows = [
-        (i, " ".join(rng.choice(words) for _ in range(8)), [rng.uniform(-1, 1) for _ in range(8)])
+        (i, " ".join(rng.choice(words) for _ in range(8)), [rng.uniform(-1, 1) for _ in range(dim)])
         for i in range(300)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, embedding array<double>")
-    qv = [rng.uniform(-1, 1) for _ in range(8)]
+    return docs, [rng.uniform(-1, 1) for _ in range(dim)]
+
+
+def test_hybrid_query_is_one_lazy_plan(spark):
+    """No persisted table survives the query, and the query runs a bounded
+    number of jobs (one lazy plan: no eager side-work per arm)."""
+    docs, qv = _hybrid_corpus(spark, dim=8)
     sc = spark.sparkContext
     persisted = sc._jsc.getPersistentRDDs().size()
     group = "test-hybrid-one-plan"
@@ -115,3 +183,28 @@ def test_hybrid_query_is_one_lazy_plan(spark):
     assert sc._jsc.getPersistentRDDs().size() == persisted
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= MAX_HYBRID_JOBS, jobs
+
+
+def test_hybrid_query_build_round_trips(spark):
+    """Building one hybrid query (kNN + BM25 -> RRF -> top 10) stays within a
+    py4j round-trip budget: each operator renders its expressions as SQL
+    text and parses them once."""
+    docs, qv = _hybrid_corpus(spark, dim=64)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        dense = knn_brute_force(docs, "doc_id", "embedding", qv, k=50, metric="cosine")
+        sparse = bm25_topk(docs, "doc_id", "text", "cancer pathway signal", k=50)
+        fused = rrf_fuse({"dense": dense, "sparse": sparse}, weights={"dense": 0.6, "sparse": 0.4})
+        top = fused.orderBy(F.desc("rrf_score"), F.asc("doc_id")).limit(10)
+    finally:
+        del client.send_command
+    assert len(sent) <= MAX_HYBRID_ROUND_TRIPS, len(sent)
+    assert len(top.collect()) == 10

@@ -3,7 +3,10 @@
 The shared expression helpers (tokenize / token_count / shingles /
 dot_product / l2_norm / l2_distance / cosine_similarity / portable_hash64 /
 mulmod_affine_p61) gained a branch that renders the SAME expression tree as
-one F.expr parse when given a plain column name — ~10-50x cheaper to build
+one F.expr parse when given a plain column name, and the renderers
+sql_double (a Python float as a DOUBLE literal, NaN and ±Infinity included)
+and sql_inputs (quoted names, or fixed aliases for dotted ones) carry
+query vectors and centroids into such SQL text — ~10-50x cheaper to build
 than the py4j-composed Column tree (guide §5: the driver should do almost
 no work; plan-build was 39% of the r10 bench suite). These tests pin the
 fast path value-identical to the Column-API path on adversarial inputs
@@ -12,6 +15,8 @@ drift can never silently change query results.
 """
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -158,3 +163,66 @@ def test_quote_name_escapes_backticks_and_rejects_dots(spark):
         tokenize("a.b").alias("toks"), tokenize(F.col("a.b")).alias("toks_col")
     ).collect()[0]
     assert row["toks"] == row["toks_col"] == ["alpha", "beta", "gamma"]
+
+
+def test_sql_double_literals(spark):
+    from vectordb_bioinsight_spark.functions.hashing import sql_double
+
+    xs = [1e300, 1e-05, -0.0, 0.1, -2.5, 3.0, float("nan"), float("inf"), float("-inf")]
+    assert [sql_double(x) for x in xs[:3]] == ["1e+300D", "1e-05D", "-0.0D"]
+    assert sql_double(float("nan")) == "CAST('NaN' AS DOUBLE)"
+    assert sql_double(float("-inf")) == "CAST('-Infinity' AS DOUBLE)"
+    row = spark.range(1).selectExpr(*[f"{sql_double(x)} AS c{i}" for i, x in enumerate(xs)]).collect()[0]
+    for i, x in enumerate(xs):
+        got = row[f"c{i}"]
+        assert (math.isnan(got) and math.isnan(x)) or (got == x and math.copysign(1, got) == math.copysign(1, x))
+
+
+def _same(a, b):
+    return a == b or (a is not None and b is not None and math.isnan(a) and math.isnan(b))
+
+
+@pytest.mark.parametrize("qv", [[float("nan"), 1.0, 0.5], [float("inf"), -1.0, 2.0], [1.0, float("-inf"), 0.0]])
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+def test_knn_non_finite_query_vector(vecs, qv, metric):
+    """A NaN/±Infinity query component renders as a parseable literal and
+    scores like the twin built from F.lit literals."""
+    from vectordb_bioinsight_spark.functions.vector import dot_product, l2_distance, l2_norm
+    from vectordb_bioinsight_spark.operators.vector import knn_brute_force
+
+    q = F.array(*[F.lit(x) for x in qv])
+    q_norm = math.sqrt(sum((x * x for x in qv), 0.0))
+    twin = {
+        "cosine": dot_product(F.col("a"), q) / F.nullif(l2_norm("a") * F.lit(q_norm), F.lit(0.0)),
+        "dot": dot_product(F.col("a"), q),
+        "l2": l2_distance(F.col("a"), q),
+    }[metric]
+    want = {r["id"]: r["s"] for r in vecs.select("id", F.round(twin, 6).alias("s")).collect()}
+    got = {r["id"]: r["score"] for r in knn_brute_force(vecs, "id", "a", qv, k=10, metric=metric).collect()}
+    assert got.keys() == want.keys()
+    for i in want:
+        assert _same(got[i], want[i]), (i, got[i], want[i])
+
+
+def test_pq_encode_non_finite_centroid(vecs):
+    """Centroids holding NaN/±Infinity render as parseable literals; codes
+    equal the twin argmin built from F.lit literals."""
+    from vectordb_bioinsight_spark.operators.pq import pq_encode
+
+    codebook = [[[float("nan"), 0.0, 1.0], [float("inf"), 1.0, 1.0], [0.5, float("-inf"), 0.0], [1.0, 2.0, 3.0]]]
+
+    def d2(c):
+        arr = F.array(*[F.lit(x) for x in c])
+        return F.aggregate(
+            F.zip_with(F.slice("a", 1, 3), arr, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+
+    twin = F.array_min(
+        F.array(*[F.struct(F.round(d2(c), 6).alias("d"), F.lit(j).alias("c")) for j, c in enumerate(codebook[0])])
+    )["c"]
+    rows = pq_encode(vecs, "id", "a", codebook).select(F.col("pq_code")[0].alias("fast"), twin.alias("slow")).collect()
+    assert rows
+    for r in rows:
+        assert r["fast"] == r["slow"], (r["fast"], r["slow"])

@@ -13,7 +13,9 @@ engine-portable form.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: DuckDB expression template computing the same value as portable_hash64.
@@ -40,8 +42,43 @@ def quote_name(name: str) -> str | None:
     """
     if "." in name:
         return None
+    return quote_identifier(name)
+
+
+def quote_identifier(name: str) -> str:
+    """Backtick-quote a literal column name (dots included), escaping
+    embedded backticks by doubling."""
     escaped = name.replace("`", "``")
     return f"`{escaped}`"
+
+
+def sql_inputs(df: DataFrame, key: str, *cols: str) -> tuple[DataFrame, str, list[str]]:
+    """``(df, key_sql, [col_sql, ...])``: the frame and the SQL names to
+    render one single-parse expression over its columns ``key`` and ``cols``.
+
+    Plain names are quoted in place. If any name is dotted (``F.col``
+    semantics: a struct field or a qualified column), the inputs are
+    selected once: ``key`` under the name ``F.col(key)`` gives it, so
+    outputs keep that name, and each of ``cols`` under the fixed alias
+    ``_in{i}``."""
+    quoted = [quote_name(n) for n in (key, *cols)]
+    if None not in quoted:
+        return df, quoted[0], quoted[1:]
+    df = df.select(F.col(key), *[F.col(c).alias(f"_in{i}") for i, c in enumerate(cols)])
+    return df, quote_identifier(df.columns[0]), [f"`_in{i}`" for i in range(len(cols))]
+
+
+def sql_double(x: float) -> str:
+    """Spark SQL literal of a Python float as a DOUBLE: ``repr(x) + "D"``
+    for finite values (``1e-05D``, ``-0.0D`` and ``1e+300D`` parse), a
+    cast string for NaN and ±Infinity, which have no numeric literal
+    (``nanD`` would parse as a column name)."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
 
 
 def portable_hash64(col: Column | str) -> Column:

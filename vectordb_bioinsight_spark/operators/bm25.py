@@ -24,11 +24,13 @@ touches only the posting lists of the query's terms (predicate pushdown on
 from __future__ import annotations
 
 from collections import Counter
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_bioinsight_spark.functions.text import tokenize
+from vectordb_bioinsight_spark.functions.hashing import sql_double, sql_inputs
+from vectordb_bioinsight_spark.functions.text import tokenize, tokenize_spark_sql
 
 K1_DEFAULT = 1.5
 B_DEFAULT = 0.75
@@ -122,56 +124,63 @@ def bm25_topk(
     Physical plan (the fast path for ad-hoc queries without a prebuilt
     postings table): ONE tokenize scan → ONE groupBy(doc) computing dl and
     per-query-term tf as conditional aggregates (query terms are literals, so
-    no postings join at all) → 1-row corpus-stats broadcast → score
-    expression → TakeOrdered. Two shuffles total, both map-side combinable —
-    ~20× cheaper than the generic postings⨝stats⨝terms plan it replaces,
-    identical scores. For repeated queries at scale, build_postings/
-    bm25_scores remains the materialized-index path.
+    no postings join at all) → 1-row corpus-stats aggregate, broadcast →
+    score expression → TakeOrdered. The executed plan shuffles three times:
+    the map-side-combined ``doc_id`` hash exchange (planned under both
+    consumers, reused at run time), the single-partition exchange of the
+    stats aggregate (then its broadcast) and the top-k's single-partition
+    shuffle — ~20× cheaper than the generic postings⨝stats⨝terms plan it
+    replaces, identical scores. For repeated queries at scale,
+    build_postings/bm25_scores remains the materialized-index path.
+
+    Every expression is rendered as SQL text and parsed once per clause:
+    composing the per-term aggregates and the Okapi sum through the Column
+    API costs ~1,450 py4j round trips for a 3-term query. Query terms are
+    ``[a-z0-9]+`` (``_tokenize_py``), so they are safe as SQL string
+    literals.
     """
     from vectordb_bioinsight_spark.functions.text import STOPWORDS  # local to avoid cycle
 
+    documents, idq, (textq,) = sql_inputs(documents, id_col, text_col)
     terms = [t for t in _tokenize_py(query) if t not in STOPWORDS]
     if not terms:
-        return documents.select(
-            F.col(id_col).alias("doc_id"), F.lit(0.0).alias("score")
-        ).limit(0)
-    tokens = documents.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokenize(text_col)).alias("term")
-    )
+        return documents.selectExpr(f"{idq} AS doc_id", "0.0D AS score").limit(0)
+    tokens = documents.selectExpr(f"{idq} AS doc_id", f"explode({tokenize_spark_sql(textq)}) AS term")
+    tf = [f"_tf_{i}" for i in range(len(terms))]
     # ONE heavy aggregation: per-doc length + per-query-term tf (conditional
     # aggregates — query terms are literals, no postings join needed).
     per_doc = tokens.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("dl"),
+        F.expr("CAST(count(*) AS BIGINT) AS dl"),
         *[
-            F.sum(F.when(F.col("term") == t, 1).otherwise(0)).cast("long").alias(f"_tf_{i}")
-            for i, t in enumerate(terms)
+            F.expr(f"CAST(sum(CASE WHEN term = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS {c}")
+            for t, c in zip(terms, tf)
         ],
     )
     # ONE tiny aggregate over the per-doc table: corpus stats + per-term df.
-    stats = per_doc.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum(F.when(F.col(f"_tf_{i}") > 0, 1).otherwise(0)).cast("double").alias(f"_df_{i}")
-            for i in range(len(terms))
-        ],
+    stats = per_doc.selectExpr(
+        "CAST(count(*) AS DOUBLE) AS n_docs",
+        "avg(dl) AS avgdl",
+        *[f"CAST(sum(CASE WHEN {c} > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS _df_{i}" for i, c in enumerate(tf)],
     )
-    any_hit = None
-    for i in range(len(terms)):
-        cond = F.col(f"_tf_{i}") > 0
-        any_hit = cond if any_hit is None else (any_hit | cond)
+    # explicit left-nested parentheses: the SQL parser balances a flat
+    # OR chain, the Column API nests it to the left
+    any_hit = reduce(lambda acc, c: f"({acc} OR ({c} > 0))", tf[1:], f"({tf[0]} > 0)")
     scored = per_doc.filter(any_hit).crossJoin(F.broadcast(stats))
-    total = None
-    for i in range(len(terms)):
-        idf = F.log((F.col("n_docs") - F.col(f"_df_{i}") + 0.5) / (F.col(f"_df_{i}") + 0.5) + 1.0)
-        tf = F.col(f"_tf_{i}")
-        contrib = F.when(
-            tf > 0,
-            idf * (tf * (K1_DEFAULT + 1.0))
-            / (tf + K1_DEFAULT * (1.0 - B_DEFAULT + B_DEFAULT * F.col("dl") / F.col("avgdl"))),
-        ).otherwise(F.lit(0.0))
-        total = contrib if total is None else total + contrib
-    scores = scored.select("doc_id", F.round(total, 6).alias("score"))
+    # operand order is the one the Column API builds for this formula (a
+    # reflected ``B * col`` puts the column first), so the expression tree
+    # equals the Column-API form's, not just its value
+    norm = (
+        f"((((dl * {sql_double(B_DEFAULT)}) / avgdl) + {sql_double(1.0 - B_DEFAULT)})"
+        f" * {sql_double(K1_DEFAULT)})"
+    )
+    total = " + ".join(
+        f"CASE WHEN ({c} > 0) THEN"
+        f" ((ln((((n_docs - _df_{i}) + 0.5D) / (_df_{i} + 0.5D)) + 1.0D)"
+        f" * ({c} * {sql_double(K1_DEFAULT + 1.0)})) / ({c} + {norm}))"
+        f" ELSE 0.0D END"
+        for i, c in enumerate(tf)
+    )
+    scores = scored.selectExpr("doc_id", f"round({total}, 6) AS score")
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 

@@ -19,6 +19,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vectordb_bioinsight_spark.functions.hashing import sql_double, sql_inputs
+
 RRF_K_DEFAULT = 60
 
 
@@ -33,20 +35,21 @@ def rrf_fuse(
 
     Ranks are 0-based by descending score with doc_id tie-break (total order);
     rrf_score is normalized to 0-100 by the max and rounded to 6 dp for hash
-    stability.
+    stability. Each arm's contribution and the normalization are rendered as
+    SQL text and parsed once (~280 py4j round trips through the Column API
+    for two arms).
     """
     weights = weights or {name: 1.0 for name in arms}
-    rank = Window.orderBy(F.desc(score_col), F.asc(id_col))
-    contribs = [
-        df.select(
-            F.col(id_col),
-            (F.lit(float(weights[name])) / (F.lit(float(rrf_k)) + F.row_number().over(rank))).alias("_c"),
-        )
-        for name, df in arms.items()
-    ]
-    fused = reduce(DataFrame.unionByName, contribs).groupBy(id_col).agg(F.sum("_c").alias("_raw"))
-    top = F.max("_raw").over(Window.partitionBy())
-    return fused.select(id_col, F.round(F.col("_raw") / top * 100.0, 6).alias("rrf_score"))
+    contribs = []
+    for name, df in arms.items():
+        df, idq, (sq,) = sql_inputs(df, id_col, score_col)
+        contribs.append(df.selectExpr(
+            idq,
+            f"{sql_double(weights[name])} / ({sql_double(rrf_k)}"
+            f" + row_number() OVER (ORDER BY {sq} DESC, {idq} ASC)) AS _c",
+        ))
+    fused = reduce(DataFrame.unionByName, contribs).groupBy(idq).agg(F.expr("sum(_c) AS _raw"))
+    return fused.selectExpr(idq, "round(_raw / max(_raw) OVER () * 100.0D, 6) AS rrf_score")
 
 
 def retrieval_metrics(

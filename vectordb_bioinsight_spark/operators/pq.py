@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_bioinsight_spark.functions.hashing import sql_double
+
 #: driver-side guards (same discipline as semdedup.MAX_INLINE_CENTROIDS)
 MAX_CODES = 256
 MAX_SUBSPACES = 16
@@ -155,7 +157,7 @@ def _sub_slice_sql(vec_sql: str, i: int, sub_d: int) -> str:
 
 
 def _d2_sql(sub_sql: str, cent: list[float]) -> str:
-    arr = "array(" + ",".join(f"{c!r}D" for c in cent) + ")"
+    arr = "array(" + ",".join(sql_double(c) for c in cent) + ")"
     return (
         f"aggregate(zip_with({sub_sql}, {arr},"
         f" (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"

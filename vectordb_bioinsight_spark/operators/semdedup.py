@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_bioinsight_spark.functions.hashing import sql_double
 from vectordb_bioinsight_spark.functions.vector import cosine_similarity
 from vectordb_bioinsight_spark.operators.vector import similarity_self_join
 
@@ -77,7 +78,7 @@ def assign_fixed_centroids(
     vq = f"`{vec_col}`"
 
     def _cent_sql(rank: int, row) -> str:
-        arr = "array(" + ",".join(f"{float(x)!r}D" for x in row[vec_col]) + ")"
+        arr = "array(" + ",".join(sql_double(x) for x in row[vec_col]) + ")"
         cid = row[id_col]
         cid_sql = f"'{cid}'" if isinstance(cid, str) else repr(cid)
         cos = (

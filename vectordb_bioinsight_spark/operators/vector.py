@@ -19,7 +19,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vectordb_bioinsight_spark.functions.vector import cosine_similarity, dot_product, l2_distance
+from vectordb_bioinsight_spark.functions.hashing import sql_double, sql_inputs
+from vectordb_bioinsight_spark.functions.vector import (
+    cosine_similarity,
+    dot_product,
+    dot_product_spark_sql,
+    l2_distance,
+    l2_distance_spark_sql,
+    l2_norm_spark_sql,
+)
 
 
 def knn_brute_force(
@@ -34,29 +42,37 @@ def knn_brute_force(
 
     Output (id, score) — score rounded to 6 dp, ordered best-first with id
     tie-break. Reference V3: Chroma ``collection.query`` (vector_store.py:272-299).
+
+    The score is rendered as ONE SQL string (the query vector as one
+    ``array(<x>D, ...)`` literal) and parsed once: composing it through the
+    Column API costs ~460 py4j round trips at 64 dims, one per literal
+    and operator. Catalyst sees the same expression tree, so values are
+    bit-identical.
     """
     import math
 
-    from vectordb_bioinsight_spark.functions.vector import l2_norm
-
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    vectors, idq, (vq,) = sql_inputs(vectors, id_col, vec_col)
+    qv = "array(" + ", ".join(sql_double(x) for x in query_vec) + ")"
     # query norm is a constant — compute it driver-side (same left-fold sum
     # as the column kernel) instead of re-folding the literal array per row
     q_norm = math.sqrt(sum((float(x) * float(x) for x in query_vec), 0.0))
     if metric == "cosine":
-        score = dot_product(F.col(vec_col), qv) / F.nullif(l2_norm(vec_col) * F.lit(q_norm), F.lit(0.0))
-        order = [F.desc("score"), F.asc(id_col)]
+        score = (
+            f"{dot_product_spark_sql(vq, qv)}"
+            f" / nullif({l2_norm_spark_sql(vq)} * {sql_double(q_norm)}, 0.0D)"
+        )
+        sort = F.desc
     elif metric == "dot":
-        score = dot_product(F.col(vec_col), qv)
-        order = [F.desc("score"), F.asc(id_col)]
+        score = dot_product_spark_sql(vq, qv)
+        sort = F.desc
     elif metric == "l2":
-        score = l2_distance(F.col(vec_col), qv)
-        order = [F.asc("score"), F.asc(id_col)]
+        score = l2_distance_spark_sql(vq, qv)
+        sort = F.asc
     else:
         raise ValueError(f"unknown metric {metric!r}")
     return (
-        vectors.select(F.col(id_col), F.round(score, 6).alias("score"))
-        .orderBy(*order)
+        vectors.selectExpr(idq, f"round({score}, 6) AS score")
+        .orderBy(sort("score"), F.asc(idq))
         .limit(k)
     )
 
@@ -433,7 +449,7 @@ def ivf_search_replay(
         vq = f"`{col_name}`"
 
         def _cell_sql(r) -> str:
-            arr = "array(" + ",".join(f"{float(x)!r}D" for x in r["_centroid"]) + ")"
+            arr = "array(" + ",".join(sql_double(x) for x in r["_centroid"]) + ")"
             dist = (
                 f"sqrt(aggregate(zip_with({vq}, {arr},"
                 f" (x, y) -> power(CAST(x AS DOUBLE) - y, 2)),"
