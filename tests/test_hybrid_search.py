@@ -20,7 +20,7 @@ from vectordb_bioinsight_spark.operators.bm25 import (
     doc_lengths,
 )
 from vectordb_bioinsight_spark.operators.fusion import rrf_fuse
-from vectordb_bioinsight_spark.operators.vector import knn_brute_force
+from vectordb_bioinsight_spark.operators.vector import knn_brute_force, knn_join
 
 #: three arms: overlapping and disjoint ids, tied scores inside an arm
 ARMS = {
@@ -78,14 +78,26 @@ def test_knn_brute_force_matches_numpy(spark, metric, id_name):
             assert score is None, (doc_id, score)
         else:
             assert math.isclose(score, want[doc_id], abs_tol=1e-6), (doc_id, score, want[doc_id])
-    # Spark's default null ordering: NULL scores sort last descending
-    # (cosine, dot) and first ascending (l2)
+    # NULL scores (NULL embedding, zero-norm cosine) come last for every
+    # metric: a row without a vector is never a nearest neighbour
     sign = 1.0 if metric == "l2" else -1.0
     nulls = sorted(i for i, s in got if s is None)
     ranked = sorted(((i, s) for i, s in got if s is not None), key=lambda r: (sign * r[1], r[0]))
-    expected_order = nulls + [i for i, _ in ranked] if metric == "l2" else [i for i, _ in ranked] + nulls
-    assert [i for i, _ in got] == expected_order
+    assert [i for i, _ in got] == [i for i, _ in ranked] + nulls
     assert dict(got)[30] == dict(got)[31]
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+def test_knn_join_null_embeddings_rank_last(spark, metric):
+    """knn_join ranks a candidate with a NULL embedding after every
+    candidate with a vector, for every metric."""
+    docs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [0.9, 0.1]), (4, None)], "id long, embedding array<double>"
+    )
+    queries = spark.createDataFrame([(0, [1.0, 0.0])], "id long, embedding array<double>")
+    ranked = knn_join(queries, docs, "id", "id", "embedding", k=4, metric=metric)
+    got = [(r["cand_id"], r["score"] is None) for r in ranked.orderBy("rank").collect()]
+    assert got == [(1, False), (3, False), (2, True), (4, True)]
 
 
 def _rrf_reference(arms, weights, rrf_k):

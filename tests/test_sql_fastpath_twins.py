@@ -8,7 +8,10 @@ sql_double (a Python float as a DOUBLE literal, NaN and ±Infinity included)
 and sql_inputs (quoted names, or fixed aliases for dotted ones) carry
 query vectors and centroids into such SQL text — ~10-50x cheaper to build
 than the py4j-composed Column tree (guide §5: the driver should do almost
-no work; plan-build was 39% of the r10 bench suite). These tests pin the
+no work; plan-build was 39% of the r10 bench suite). The vector operators
+that inline centroids or hyperplanes into SQL text are pinned on column
+names that need quoting, and the LSH buckets against their Column-API
+twin. These tests pin the
 fast path value-identical to the Column-API path on adversarial inputs
 (regex metacharacters, empty/NULL, zero vectors, unicode), so a rendering
 drift can never silently change query results.
@@ -226,3 +229,138 @@ def test_pq_encode_non_finite_centroid(vecs):
     assert rows
     for r in rows:
         assert r["fast"] == r["slow"], (r["fast"], r["slow"])
+
+
+@pytest.fixture(scope="module")
+def named_vectors(spark):
+    """The same ids and vectors under a plain column name, a name holding a
+    backtick and a dotted struct field: (frame, vector column name)."""
+    import random
+
+    rng = random.Random(3)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(24)]
+    rows += [(90, [0.0] * 4)]
+    return {
+        "plain": (spark.createDataFrame(rows, "id long, v array<double>"), "v"),
+        "backtick": (spark.createDataFrame(rows, "id long, `v``x` array<double>"), "v`x"),
+        "dotted": (
+            spark.createDataFrame([(i, (v,)) for i, v in rows], "id long, meta struct<v: array<double>>"),
+            "meta.v",
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", ["backtick", "dotted"])
+def test_vector_column_name_quoting(spark, named_vectors, name):
+    """pq_encode, assign_fixed_centroids, lsh_assign_buckets and
+    ivf_search_replay give the same result for a vector column whose name
+    needs backtick escaping, or is a dotted struct field, as for a plain
+    name."""
+    from vectordb_bioinsight_spark.operators.pq import pq_encode
+    from vectordb_bioinsight_spark.operators.semdedup import assign_fixed_centroids
+    from vectordb_bioinsight_spark.operators.vector import ivf_search_replay, lsh_assign_buckets
+
+    codebook = [[[0.5, -0.5], [-0.5, 0.5], [0.0, 0.0]], [[1.0, 1.0], [-1.0, -1.0], [0.2, -0.2]]]
+    cents = spark.createDataFrame(
+        [(0, [0.5, 0.5, 0.5, 0.5]), (1, [-0.5, -0.5, 0.5, 0.5]), (2, [0.5, -0.5, -0.5, 0.5])],
+        "_cell int, _centroid array<double>",
+    )
+
+    def run(df, col):
+        queries = df.filter("id < 4")
+        return {
+            "pq": sorted(tuple(r) for r in pq_encode(df, "id", col, codebook).select("id", "pq_code").collect()),
+            "semdedup": sorted(
+                tuple(r)
+                for r in assign_fixed_centroids(df, "id", col, n_clusters=3)
+                .select("id", "cluster_id", "centroid_cos")
+                .collect()
+            ),
+            "lsh": sorted(tuple(r) for r in lsh_assign_buckets(df, "id", col, dim=4, num_planes=5).select("id", "bucket").collect()),
+            "ivf": sorted(tuple(r) for r in ivf_search_replay(df, queries, "id", "id", col, cents, k=3, n_probe=2).collect()),
+        }
+
+    want = run(*named_vectors["plain"])
+    got = run(*named_vectors[name])
+    assert all(want.values())
+    assert got == want
+    # outputs keep every input column and add only their own
+    df, col = named_vectors[name]
+    assert pq_encode(df, "id", col, codebook).columns == [*df.columns, "pq_code"]
+    assert assign_fixed_centroids(df, "id", col, 3).columns == [*df.columns, "cluster_id", "centroid_cos"]
+    assert lsh_assign_buckets(df, "id", col, 4, 5).columns == [*df.columns, "bucket"]
+
+
+def _lsh_buckets_column_twin(vectors, vec_col, dim, num_planes, seed):
+    """The Column-API composition lsh_assign_buckets used before it rendered
+    SQL text: one F.lit per plane coefficient."""
+    from vectordb_bioinsight_spark.functions.vector import dot_product
+    from vectordb_bioinsight_spark.operators.vector import lsh_planes
+
+    bucket = F.lit(0).cast("long")
+    for j, p in enumerate(lsh_planes(dim, num_planes, seed)):
+        pv = F.array(*[F.lit(x) for x in p])
+        bucket = bucket + F.when(dot_product(F.col(vec_col), pv) >= 0, F.lit(1 << j).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+    return bucket
+
+
+def test_lsh_buckets_match_column_twin(spark):
+    """Buckets over a fixed seeded table (zero vector and NULL included)
+    equal the Column-API twin's, row for row, with 33 planes so the top
+    bits exceed an int."""
+    import random
+
+    from vectordb_bioinsight_spark.operators.vector import lsh_assign_buckets
+
+    rng = random.Random(17)
+    dim = 16
+    rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(dim)]) for i in range(200)]
+    rows += [(500, [0.0] * dim), (501, None)]
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    for planes, seed in ((8, 42), (33, 7)):
+        twin = _lsh_buckets_column_twin(df, "embedding", dim, planes, seed)
+        got = lsh_assign_buckets(df, "id", "embedding", dim, planes, seed).select(
+            "id", "bucket", twin.alias("twin")
+        )
+        rows_out = got.collect()
+        assert len(rows_out) == len(rows)
+        assert len({r["bucket"] for r in rows_out}) > 1
+        for r in rows_out:
+            assert r["bucket"] == r["twin"], (r["id"], r["bucket"], r["twin"])
+        assert got.schema["bucket"].dataType.simpleString() == "bigint"
+
+
+#: py4j round trips allowed to build one knn_lsh query (64 dims, 8 planes);
+#: the Column-API composition of the buckets took ~2,700
+MAX_KNN_LSH_ROUND_TRIPS = 100
+
+
+def test_knn_lsh_build_round_trips(spark):
+    """Building one knn_lsh query renders the bucket expression as SQL text
+    and parses it once, within a py4j round-trip budget."""
+    import random
+
+    from vectordb_bioinsight_spark.operators.vector import knn_lsh
+
+    rng = random.Random(5)
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(100)], "vec_id long, embedding array<double>"
+    )
+    qv = [rng.uniform(-1, 1) for _ in range(64)]
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        top = knn_lsh(df, "vec_id", "embedding", qv, dim=64, k=5, num_planes=8)
+    finally:
+        del client.send_command
+    assert len(sent) <= MAX_KNN_LSH_ROUND_TRIPS, len(sent)
+    top.collect()

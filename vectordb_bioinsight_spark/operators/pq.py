@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_bioinsight_spark.functions.hashing import sql_double
+from vectordb_bioinsight_spark.functions.hashing import quote_name, sql_double
 
 #: driver-side guards (same discipline as semdedup.MAX_INLINE_CENTROIDS)
 MAX_CODES = 256
@@ -175,7 +175,11 @@ def pq_encode(
     order). The whole m×k expression tree is rendered as ONE SQL string
     and parsed once; Catalyst codegens it like any other projection."""
     m, k, sub_d = _check_shape(codebook)
-    vq = f"`{vec_col}`"
+    vq = quote_name(vec_col)
+    if vq is None:  # dotted name (F.col semantics): read it under a fixed alias
+        return pq_encode(
+            vectors.withColumn("_pq_in", F.col(vec_col)), id_col, "_pq_in", codebook
+        ).drop("_pq_in")
     subs = []
     for i in range(m):
         sub_sql = _sub_slice_sql(vq, i, sub_d)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_bioinsight_spark.functions.hashing import sql_double
+from vectordb_bioinsight_spark.functions.hashing import quote_name, sql_double, sql_inputs
 from vectordb_bioinsight_spark.functions.vector import cosine_similarity
 from vectordb_bioinsight_spark.operators.vector import similarity_self_join
 
@@ -67,7 +67,15 @@ def assign_fixed_centroids(
     """
     if n_clusters < 1 or n_clusters > MAX_INLINE_CENTROIDS:
         raise ValueError(f"n_clusters must be in [1, {MAX_INLINE_CENTROIDS}]")
-    cents = vectors.select(id_col, vec_col).orderBy(id_col).limit(n_clusters).collect()
+    vq = quote_name(vec_col)
+    if vq is None:  # dotted name (F.col semantics): read it under a fixed alias
+        return assign_fixed_centroids(
+            vectors.withColumn("_cent_in", F.col(vec_col)), id_col, "_cent_in", n_clusters
+        ).drop("_cent_in")
+    src, idq, (vin,) = sql_inputs(vectors, id_col, vec_col)
+    cents = (
+        src.selectExpr(f"{idq} AS _id", f"{vin} AS _v").orderBy("_id").limit(n_clusters).collect()
+    )
     if not cents:
         raise ValueError("assign_fixed_centroids: empty input")
     # The whole k-way argmax is rendered as ONE SQL string and parsed once:
@@ -75,11 +83,9 @@ def assign_fixed_centroids(
     # trips (measured ~0.9 s of pure plan-build at k=8), while one
     # F.expr parse of the same tree is ~10 ms. Catalyst sees an identical
     # expression either way.
-    vq = f"`{vec_col}`"
-
     def _cent_sql(rank: int, row) -> str:
-        arr = "array(" + ",".join(sql_double(x) for x in row[vec_col]) + ")"
-        cid = row[id_col]
+        arr = "array(" + ",".join(sql_double(x) for x in row["_v"]) + ")"
+        cid = row["_id"]
         cid_sql = f"'{cid}'" if isinstance(cid, str) else repr(cid)
         cos = (
             f"aggregate(zip_with({vq}, {arr}, (x, y) -> CAST(x AS DOUBLE) * y),"

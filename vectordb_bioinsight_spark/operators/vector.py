@@ -15,11 +15,11 @@ are reproducible across runs/engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vectordb_bioinsight_spark.functions.hashing import sql_double, sql_inputs
+from vectordb_bioinsight_spark.functions.hashing import quote_name, sql_double, sql_inputs
 from vectordb_bioinsight_spark.functions.vector import (
     cosine_similarity,
     dot_product,
@@ -41,7 +41,8 @@ def knn_brute_force(
     """Exact top-k nearest neighbours to one query vector.
 
     Output (id, score) — score rounded to 6 dp, ordered best-first with id
-    tie-break. Reference V3: Chroma ``collection.query`` (vector_store.py:272-299).
+    tie-break; NULL scores (NULL embeddings, zero-norm cosine) come last for
+    every metric. Reference V3: Chroma ``collection.query`` (vector_store.py:272-299).
 
     The score is rendered as ONE SQL string (the query vector as one
     ``array(<x>D, ...)`` literal) and parsed once: composing it through the
@@ -67,7 +68,7 @@ def knn_brute_force(
         sort = F.desc
     elif metric == "l2":
         score = l2_distance_spark_sql(vq, qv)
-        sort = F.asc
+        sort = F.asc_nulls_last  # a NULL embedding is never a nearest neighbour
     else:
         raise ValueError(f"unknown metric {metric!r}")
     return (
@@ -115,6 +116,16 @@ def similarity_self_join(
     )
 
 
+def lsh_planes(dim: int, num_planes: int = 8, seed: int = 42) -> list[list[float]]:
+    """The ``num_planes`` seeded Gaussian hyperplanes of dimension ``dim``
+    behind :func:`lsh_assign_buckets` (a driver-side ``random.Random``
+    draw, reproducible everywhere)."""
+    import random
+
+    rng = random.Random(seed)
+    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
+
+
 def lsh_assign_buckets(
     vectors: DataFrame,
     id_col: str,
@@ -125,23 +136,30 @@ def lsh_assign_buckets(
 ) -> DataFrame:
     """Random-hyperplane LSH bucket per vector (deterministic, seeded).
 
-    Hyperplane coefficients come from a seeded driver-side RNG and are inlined
+    Hyperplane coefficients come from :func:`lsh_planes` and are inlined
     as literals — a tiny broadcast, reproducible everywhere. Bucket = integer
     whose bit j is sign(v·p_j). Vectors in the same bucket are cosine-close
     with high probability; use as ``block_col`` for similarity_self_join or
     group-by for IVF-style search.
-    """
-    import random
 
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
-    bucket = F.lit(0).cast("long")
-    for j, p in enumerate(planes):
-        pv = F.array(*[F.lit(x) for x in p])
-        bucket = bucket + F.when(dot_product(F.col(vec_col), pv) >= 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
+    The bucket is rendered as ONE SQL string (each plane one
+    ``array(<x>D, ...)`` literal) and parsed once: composing it through the
+    Column API costs ~2,700 py4j round trips at 64 dims and 8 planes, one
+    per literal and operator. Catalyst sees the same expression tree.
+    """
+    vq = quote_name(vec_col)
+    if vq is None:  # dotted name (F.col semantics): read it under a fixed alias
+        return lsh_assign_buckets(
+            vectors.withColumn("_lsh_in", F.col(vec_col)), id_col, "_lsh_in", dim, num_planes, seed
+        ).drop("_lsh_in")
+    bucket = "CAST(0 AS BIGINT)"
+    for j, p in enumerate(lsh_planes(dim, num_planes, seed)):
+        plane = "array(" + ", ".join(sql_double(x) for x in p) + ")"
+        bucket += (
+            f" + CASE WHEN {dot_product_spark_sql(vq, plane)} >= 0"
+            f" THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
         )
-    return vectors.withColumn("bucket", bucket)
+    return vectors.withColumn("bucket", F.expr(bucket))
 
 
 def knn_lsh(
@@ -162,12 +180,8 @@ def knn_lsh(
     becomes a partition key and the scan prunes to one partition.
     """
     bucketed = lsh_assign_buckets(vectors, id_col, vec_col, dim, num_planes, seed)
-    import random
-
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
     qb = 0
-    for j, p in enumerate(planes):
+    for j, p in enumerate(lsh_planes(dim, num_planes, seed)):
         if sum(a * b for a, b in zip(query_vec, p)) >= 0:
             qb |= 1 << j
     return knn_brute_force(bucketed.filter(F.col("bucket") == qb), id_col, vec_col, query_vec, k)
@@ -189,7 +203,8 @@ def knn_join(
     side streams through one scan, and the per-query top-k is a window over
     the (bounded) query key. Self-matches (same id) are excluded.
 
-    Output (query_id, cand_id, score, rank), best-first per query.
+    Output (query_id, cand_id, score, rank), best-first per query, NULL
+    scores ranked last for every metric.
     """
     from vectordb_bioinsight_spark.functions.vector import l2_norm
 
@@ -215,7 +230,7 @@ def knn_join(
         order = [F.desc("score"), F.asc("cand_id")]
     elif metric == "l2":
         score = l2_distance("_cv", "_qv")
-        order = [F.asc("score"), F.asc("cand_id")]
+        order = [F.asc_nulls_last("score"), F.asc("cand_id")]
     else:
         raise ValueError(f"unknown metric {metric!r}")
     from pyspark.sql import Window
@@ -421,7 +436,6 @@ def ivf_search_replay(
     """
     from pyspark.sql import Window
 
-    from vectordb_bioinsight_spark.functions.vector import l2_norm
     from vectordb_bioinsight_spark.operators.semdedup import MAX_INLINE_CENTROIDS
 
     # the centroid frame is collected AND inlined as expression literals,
@@ -437,17 +451,15 @@ def ivf_search_replay(
         )
     rows = sorted(rows, key=lambda r: r["_cell"])
 
-    def _cells(col_name: str) -> Column:
+    def _cells(vq: str) -> str:
         # array<struct<d,c>> sorted lexicographically == (dist asc, cell asc).
         # The whole k-cell argmin is rendered as ONE SQL string and parsed
         # once: composing it per centroid through the Column API costs
         # O(cells × dims) py4j round trips (~18k calls, ~2 s of pure
-        # plan-build at 16×64), while one F.expr parse is ~10 ms — the
+        # plan-build at 16×64), while one parse is ~10 ms — the
         # assign_fixed_centroids discipline (operators/semdedup.py).
         # Catalyst sees the identical expression tree (power(x-y, 2) is
         # exactly what Column.__pow__ builds), so values are bit-identical.
-        vq = f"`{col_name}`"
-
         def _cell_sql(r) -> str:
             arr = "array(" + ",".join(sql_double(x) for x in r["_centroid"]) + ")"
             dist = (
@@ -457,25 +469,21 @@ def ivf_search_replay(
             )
             return f"struct(round({dist}, 6) AS d, {int(r['_cell'])} AS c)"
 
-        return F.expr(
-            "array_sort(array(" + ",".join(_cell_sql(r) for r in rows) + "))"
-        )
+        return "array_sort(array(" + ",".join(_cell_sql(r) for r in rows) + "))"
 
-    v = vectors.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("_cv"),
-        l2_norm(vec_col).alias("_cn"),
-        F.element_at(_cells(vec_col), 1)["c"].alias("_cell"),
+    vectors, idq, (vq,) = sql_inputs(vectors, id_col, vec_col)
+    v = vectors.selectExpr(
+        f"{idq} AS cand_id",
+        f"{vq} AS _cv",
+        f"{l2_norm_spark_sql(vq)} AS _cn",
+        f"element_at({_cells(vq)}, 1).c AS _cell",
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(vec_col).alias("_qn"),
-        F.explode(
-            F.transform(
-                F.slice(_cells(vec_col), 1, n_probe), lambda s: s["c"]
-            )
-        ).alias("_cell"),
+    queries, qidq, (qvq,) = sql_inputs(queries, query_id_col, vec_col)
+    q = queries.selectExpr(
+        f"{qidq} AS query_id",
+        f"{qvq} AS _qv",
+        f"{l2_norm_spark_sql(qvq)} AS _qn",
+        f"explode(transform(slice({_cells(qvq)}, 1, {int(n_probe)}), s -> s.c)) AS _cell",
     )
     pairs = v.join(F.broadcast(q), "_cell").filter(
         F.col("cand_id") != F.col("query_id")

@@ -809,15 +809,13 @@ def q_knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_lsh_sql(num_planes: int = 4, dim: int = 64, seed: int = 42, k: int = 10) -> str:
-    """Generated twin of q_knn_lsh_bucketed: the same random.Random(seed)
-    hyperplane draw as operators/vector.lsh_assign_buckets, inlined as SQL
-    array literals (repr() round-trips doubles exactly on both parsers)."""
-    import random
-
+    """Generated twin of q_knn_lsh_bucketed: the same seeded hyperplanes
+    (operators/vector.lsh_planes), inlined as SQL array literals (repr()
+    round-trips doubles exactly on both parsers)."""
+    from vectordb_bioinsight_spark.operators.vector import lsh_planes
     from vectordb_bioinsight_spark.plans.catalog_vector import QUERY_VEC_ID
 
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
+    planes = lsh_planes(dim, num_planes, seed)
 
     def bucket_expr(col: str) -> str:
         return " + ".join(

@@ -36,6 +36,7 @@ from vectordb_bioinsight_spark.sources.maintenance import (
     _flip_pointer,
     snapshot_path,
 )
+from vectordb_bioinsight_spark.sources.readers import read_parquet
 
 
 def save_ivf_index(
@@ -79,18 +80,20 @@ def load_ivf_index(
 ) -> tuple[DataFrame, DataFrame, "list[list[list[float]]] | None", dict]:
     """Load the CURRENT index version: (assigned, centroids, codebook|None,
     manifest). ``assigned._cell`` comes back as a partition column, so a
-    probe filter on it prunes files before any IO."""
+    probe filter on it prunes files before any IO. The tables are read
+    through ``read_parquet``, so reloading an unchanged version infers no
+    schema again."""
     version = _current_version(path)
     if version < 0:
         raise FileNotFoundError(f"no committed index at {path}")
     base = snapshot_path(path, version)
-    assigned = spark.read.parquet(os.path.join(base, "assigned"))
-    centroids = spark.read.parquet(os.path.join(base, "centroids"))
+    assigned = read_parquet(spark, os.path.join(base, "assigned"))
+    centroids = read_parquet(spark, os.path.join(base, "centroids"))
     with open(os.path.join(base, "MANIFEST.json"), encoding="utf-8") as fh:
         manifest = json.load(fh)
     codebook = None
     if manifest.get("has_codebook"):
-        cb_rows = spark.read.parquet(os.path.join(base, "codebook")).collect()
+        cb_rows = read_parquet(spark, os.path.join(base, "codebook")).collect()
         m = 1 + max(r["subspace"] for r in cb_rows)
         k = 1 + max(r["code"] for r in cb_rows)
         codebook = [[None] * k for _ in range(m)]

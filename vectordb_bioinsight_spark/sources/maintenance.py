@@ -29,6 +29,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vectordb_bioinsight_spark.sources.readers import read_parquet
+
 _POINTER = "_CURRENT"
 
 
@@ -48,7 +50,7 @@ def snapshot_path(path: str, version: int | None = None) -> str:
 
 def read_current(spark: SparkSession, path: str) -> DataFrame:
     """Read the current snapshot of a maintained table."""
-    return spark.read.parquet(snapshot_path(path))
+    return read_parquet(spark, snapshot_path(path))
 
 
 def _flip_pointer(path: str, version: int) -> None:
@@ -372,8 +374,8 @@ def snapshot_diff(
     + ``_change_type``.
     """
     to_v = _current_version(path) if to_version is None else to_version
-    old = spark.read.parquet(snapshot_path(path, from_version))
-    new = spark.read.parquet(snapshot_path(path, to_v))
+    old = read_parquet(spark, snapshot_path(path, from_version))
+    new = read_parquet(spark, snapshot_path(path, to_v))
     attr_cols = [c for c in new.columns if c not in key_cols]
     o = old.select(
         *[F.col(k) for k in key_cols],

@@ -9,15 +9,38 @@ Design: every scan stays a declarative ``spark.read`` so Catalyst gets
 predicate pushdown / column pruning / partition pruning for free. The sniffing
 layer only peeks at the first KB of one file on the driver — it never forces a
 full read.
+
+Parquet schema memo: inferring a parquet schema costs one Spark job that
+reads the footers (~40 ms on 4 cores, more than planning a small query), and
+a service re-reads the same tables for every query. :func:`read_parquet`
+infers each local file's schema once per set of inference settings and
+hands it back to later reads as a user-specified schema (no job). A memo
+entry is keyed by the absolute path and the session's parquet-inference
+settings (:data:`_INFERENCE_CONFS`) and holds the file's fingerprint with
+the schema: ``(st_ino, st_size, st_mtime_ns)`` of the file, or for a
+directory the sorted ``(relative path, st_ino, st_size, st_mtime_ns)`` of
+every file under it that Spark lists (names starting with ``_`` without
+``=``, or with ``.``, are skipped as Spark skips them). A changed
+fingerprint re-infers. Spark still lists the files on every read, so new
+data is always read; only the footer job is skipped. Remote URIs (any
+scheme but ``file:``) are inferred every time. A file rewritten between the
+fingerprint check and Spark's listing is read with the schema it had at the
+check (the next read re-infers); a rewrite that keeps inode, size and
+modification time to the nanosecond is not seen.
 """
 
 from __future__ import annotations
 
 import csv as _csv
 import os
+import stat
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Tables in the driver-provided TPC-H-ish testdata (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -34,21 +57,105 @@ TESTDATA_TABLES = (
 )
 
 
+#: Session settings that change the schema Spark infers from parquet files.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: Most schemas the memo holds; the least recently used entry goes first.
+_SCHEMA_MEMO_SIZE = 256
+
+_schema_memo: "OrderedDict[tuple, tuple[object, StructType]]" = OrderedDict()
+_schema_memo_lock = threading.Lock()
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps this file or directory name
+    (InMemoryFileIndex.shouldFilterOutPathName)."""
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    hidden = hidden or name.endswith("._COPYING_")
+    return not hidden or name.startswith(("_metadata", "_common_metadata"))
+
+
+def _fingerprint(path: str) -> object:
+    """``(st_ino, st_size, st_mtime_ns)`` of a file; for a directory, the
+    sorted ``(relative path, st_ino, st_size, st_mtime_ns)`` of every file
+    under it that Spark lists. Raises OSError when ``path`` is missing."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    files = []
+    for root, dirs, names in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        for name in names:
+            if _listed(name):
+                full = os.path.join(root, name)
+                s = os.stat(full)
+                files.append((os.path.relpath(full, path), s.st_ino, s.st_size, s.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per file
+    version (module docstring: key, fingerprint, what is not memoized).
+
+    On a memo hit the read is ``spark.read.schema(schema).parquet(path)``:
+    the same columns, types and partition columns, without the
+    footer-reading job."""
+    scheme = urlsplit(path).scheme
+    if scheme not in ("", "file"):
+        return spark.read.parquet(path)
+    local = os.path.abspath(urlsplit(path).path if scheme else path)
+    key = (local, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    try:
+        fingerprint = _fingerprint(local)
+    except OSError:
+        return spark.read.parquet(path)  # missing: Spark raises its own error
+    with _schema_memo_lock:
+        hit = _schema_memo.get(key)
+        schema = hit[1] if hit is not None and hit[0] == fingerprint else None
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _schema_memo_lock:
+        _schema_memo[key] = (fingerprint, df.schema)
+        _schema_memo.move_to_end(key)
+        while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+            _schema_memo.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S2: parquet scan of one testdata table (column-pruned / filter-pushed).
+
+    Read through :func:`read_parquet`, which memoizes the inferred schema:
+    a table whose file fingerprint (inode, size, mtime in ns) is unchanged
+    since an earlier load under the same parquet-inference settings is read
+    with that schema and runs no Spark job; any change re-infers. The files
+    are still listed on every call. Remote URIs are inferred every time. A
+    table rewritten between the fingerprint check and Spark's listing is
+    read once with the schema of the version checked.
 
     The ``events`` table carries TIMESTAMP(NANOS) — a parquet type Spark's
     vectorized reader rejects. We read nanos as long (legacy conf) and rebuild
     a microsecond timestamp JVM-side: ``timestamp_micros(ns div 1000)``,
     matching DuckDB's TIMESTAMP_NS -> TIMESTAMP cast (floor to micros).
     """
+    path = os.path.join(sf_dir, f"{name}.parquet")
     df = None
     try:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = read_parquet(spark, path)
         _ = df.schema  # force schema resolution to surface nanos errors
     except Exception:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = read_parquet(spark, path)
     for field in df.schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             # integer `div` — float division would lose precision above 2^53 ns
