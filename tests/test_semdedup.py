@@ -221,3 +221,25 @@ def test_gemm_round_half_up_boundary(spark):
         df, "vec_id", "embedding", "cluster_id", min_cosine=0.5
     ).collect()
     assert none == []
+
+
+def test_string_centroid_ids_need_quoting(spark):
+    """String centroid ids holding a quote or a backslash are rendered as
+    exact SQL literals: assignments equal those under plain ids of the
+    same sort order."""
+    rng = np.random.default_rng(3)
+    vecs = [[float(x) for x in rng.normal(size=4)] for _ in range(6)]
+    odd = ["a\\b", "o'brien", "smith", "t'\\'u", "v", "w\\'"]
+    plain = ["a", "b", "c", "d", "e", "f"]
+    assert sorted(odd) == odd
+
+    def assign(ids):
+        df = spark.createDataFrame(list(zip(ids, vecs)), "id string, embedding array<double>")
+        out = assign_fixed_centroids(df, "id", "embedding", 2).collect()
+        return {r["id"]: (r["cluster_id"], r["centroid_cos"]) for r in out}
+
+    got = assign(odd)
+    want = assign(plain)
+    to_plain = dict(zip(odd, plain))
+    assert {to_plain[i]: (to_plain[c], cos) for i, (c, cos) in got.items()} == want
+    assert got["a\\b"] == ("a\\b", 1.0) and got["o'brien"] == ("o'brien", 1.0)

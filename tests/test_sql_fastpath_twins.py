@@ -181,6 +181,15 @@ def test_sql_double_literals(spark):
         assert (math.isnan(got) and math.isnan(x)) or (got == x and math.copysign(1, got) == math.copysign(1, x))
 
 
+def test_sql_string_literals(spark):
+    from vectordb_bioinsight_spark.functions.hashing import sql_string
+
+    xs = ["plain", "o'brien", "a\\b", "\\'", "'", "tab\there", "", "x\\nnot a newline"]
+    assert sql_string("o'brien") == "'o\\'brien'"
+    row = spark.range(1).selectExpr(*[f"{sql_string(x)} AS c{i}" for i, x in enumerate(xs)]).collect()[0]
+    assert [row[f"c{i}"] for i in range(len(xs))] == xs
+
+
 def _same(a, b):
     return a == b or (a is not None and b is not None and math.isnan(a) and math.isnan(b))
 

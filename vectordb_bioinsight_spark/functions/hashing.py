@@ -81,6 +81,15 @@ def sql_double(x: float) -> str:
     return f"{x!r}D"
 
 
+def sql_string(x: str) -> str:
+    """Spark SQL literal of a Python string: single-quoted, with each
+    backslash and single quote escaped by a backslash, so the parser's
+    unescaping gives back ``x`` exactly (``o'brien`` and ``a\\b`` round-trip;
+    the session keeps Spark's default ``spark.sql.parser.escapedStringLiterals
+    = false``)."""
+    return "'" + x.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def portable_hash64(col: Column | str) -> Column:
     """60-bit integer hash of a string column, reproducible in DuckDB/Python.
 

@@ -40,12 +40,15 @@ def dot_product_spark_sql(a: str, b: str) -> str:
     )
 
 
-def l2_norm_spark_sql(a: str) -> str:
-    return (
-        f"sqrt(aggregate(transform({a},"
-        f" x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),"
-        f" 0.0D, (acc, v) -> acc + v))"
-    )
+def l2_norm_spark_sql(a: str, times: str | None = None) -> str:
+    """Spark SQL text of :func:`l2_norm`; with ``times`` (a SQL literal),
+    of ``l2_norm * times`` with the product in the fold's finish lambda:
+    the same floating-point operations, but a per-query constant stays in
+    interpreted lambda code instead of the generated Java."""
+    fold = f"aggregate(transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v"
+    if times is None:
+        return f"sqrt({fold}))"
+    return f"{fold}, acc -> sqrt(acc) * {times})"
 
 
 def l2_distance_spark_sql(a: str, b: str) -> str:

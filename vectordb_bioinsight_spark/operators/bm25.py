@@ -126,12 +126,18 @@ def bm25_topk(
     per-query-term tf as conditional aggregates (query terms are literals, so
     no postings join at all) → 1-row corpus-stats aggregate, broadcast →
     score expression → TakeOrdered. The executed plan shuffles three times:
-    the map-side-combined ``doc_id`` hash exchange (planned under both
-    consumers, reused at run time), the single-partition exchange of the
-    stats aggregate (then its broadcast) and the top-k's single-partition
-    shuffle — ~20× cheaper than the generic postings⨝stats⨝terms plan it
-    replaces, identical scores. For repeated queries at scale,
-    build_postings/bm25_scores remains the materialized-index path.
+    the map-side-combined ``doc_id`` hash exchange, the single-partition
+    exchange of the stats aggregate (then its broadcast) and the top-k's
+    single-partition shuffle — ~20× cheaper than the generic
+    postings⨝stats⨝terms plan it replaces, identical scores. The
+    ``doc_id`` exchange is planned under both consumers of the per-doc
+    table (the score join and the stats aggregate). Over a parquet scan
+    the second one runs as a ``ReusedExchange``; over a cached input (the
+    search service's case) AQE runs two ShuffleQueryStages, each a
+    tokenize ``Generate`` over its own TableCacheQueryStage, so the
+    tokenize and partial aggregate run twice, concurrently. For repeated
+    queries at scale, build_postings/bm25_scores remains the
+    materialized-index path.
 
     Every expression is rendered as SQL text and parsed once per clause:
     composing the per-term aggregates and the Okapi sum through the Column

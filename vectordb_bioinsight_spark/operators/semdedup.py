@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vectordb_bioinsight_spark.functions.hashing import quote_name, sql_double, sql_inputs
+from vectordb_bioinsight_spark.functions.hashing import quote_name, sql_double, sql_inputs, sql_string
 from vectordb_bioinsight_spark.functions.vector import cosine_similarity
 from vectordb_bioinsight_spark.operators.vector import similarity_self_join
 
@@ -86,7 +86,7 @@ def assign_fixed_centroids(
     def _cent_sql(rank: int, row) -> str:
         arr = "array(" + ",".join(sql_double(x) for x in row["_v"]) + ")"
         cid = row["_id"]
-        cid_sql = f"'{cid}'" if isinstance(cid, str) else repr(cid)
+        cid_sql = sql_string(cid) if isinstance(cid, str) else repr(cid)
         cos = (
             f"aggregate(zip_with({vq}, {arr}, (x, y) -> CAST(x AS DOUBLE) * y),"
             f" 0.0D, (acc, v) -> acc + v)"

@@ -47,8 +47,17 @@ def knn_brute_force(
     The score is rendered as ONE SQL string (the query vector as one
     ``array(<x>D, ...)`` literal) and parsed once: composing it through the
     Column API costs ~460 py4j round trips at 64 dims, one per literal
-    and operator. Catalyst sees the same expression tree, so values are
-    bit-identical.
+    and operator.
+
+    Every per-query value sits inside a higher-order function (the vector
+    literal in the dot product's ``zip_with``, the query norm in the
+    row-norm ``aggregate``'s finish lambda). Those are evaluated
+    interpreted, so the Java code Spark generates around them is the same
+    for every query vector and is compiled once per session; a norm
+    inlined as a top-level ``<x>D`` literal compiled one new class per
+    query. ``sqrt(acc) * q_norm`` in the finish lambda is the same
+    floating-point operation as ``sqrt(aggregate(...)) * q_norm``, so
+    scores are bit-identical.
     """
     import math
 
@@ -60,7 +69,7 @@ def knn_brute_force(
     if metric == "cosine":
         score = (
             f"{dot_product_spark_sql(vq, qv)}"
-            f" / nullif({l2_norm_spark_sql(vq)} * {sql_double(q_norm)}, 0.0D)"
+            f" / nullif({l2_norm_spark_sql(vq, times=sql_double(q_norm))}, 0.0D)"
         )
         sort = F.desc
     elif metric == "dot":

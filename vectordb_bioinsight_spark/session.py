@@ -5,6 +5,12 @@ so the same code degrades gracefully to a 1000-executor cluster: AQE enabled
 (runtime broadcast/skew re-planning), Arrow on (pandas UDF hot paths), and
 shuffle partitions sized to cores locally (a cluster deployment overrides
 ``spark.sql.shuffle.partitions`` / relies on AQE coalescing).
+
+The codegen cache (``spark.sql.codegen.cache.maxEntries``) is sized to hold
+every Java class the catalog generates, so a warm session compiles nothing
+when it runs a query shape again. It is a static setting: it takes effect
+only when ``get_session`` creates the session (and its JVM); a call that
+finds a live session keeps that session's value.
 """
 
 from __future__ import annotations
@@ -13,13 +19,36 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ``spark.sql.codegen.cache.maxEntries`` (Spark's default is 100): Spark's
+#: least-recently-used cache of compiled Janino classes, shared by the
+#: driver and the executors of one JVM. ``scripts/codegen_census.py`` over
+#: the whole catalog at sf0.01 (TESTDATA.md; two passes, 4 cores) prints
+#:     queries: 304 (0 failed)
+#:     compilations: pass 1 3892, pass 2 181
+#:     queries compiling on pass 2: 29
+#:     codegen cache maxEntries: 8192
+#:     metaspace used after GC: 233 MiB
+#: against "pass 1 5672, pass 2 5630" and 199 MiB at the default 100
+#: entries, where every class is evicted before it is reused. One pass
+#: needs ~3,900 distinct classes (the benchmark's eight catalog queries
+#: 116: "pass 1 116, pass 2 0" here, "pass 2 82" at 100 entries), plus
+#: ~200 a pass from the 29 queries whose generated code changes between
+#: executions.
+#: 8192 is twice one pass. ~4,000 more live classes cost ~34 MiB of
+#: metaspace (outside the heap), so a full cache costs ~70 MiB.
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def get_session(app_name: str = "vectordb_bioinsight_spark", cpus: int | None = None) -> SparkSession:
     """Build (or get) a SparkSession tuned for this engine.
 
     AQE is on so that at scale: small post-filter sides auto-broadcast, skewed
     shuffle partitions split (hub genes / hot terms are the classic skew case,
-    SURVEY.md §4.2), and tiny partitions coalesce.
+    SURVEY.md §4.2), and tiny partitions coalesce. The codegen cache holds
+    ``CODEGEN_CACHE_ENTRIES`` compiled classes, so a repeated query shape
+    compiles no Java. Static settings (the codegen cache size, driver
+    memory, master) apply only when this call creates the session;
+    ``getOrCreate`` on a live session keeps that session's values.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -47,6 +76,7 @@ def get_session(app_name: str = "vectordb_bioinsight_spark", cpus: int | None = 
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.optimizer.excludedRules", excluded_rules)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
