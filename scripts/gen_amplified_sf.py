@@ -114,16 +114,17 @@ def main() -> None:
             n = con.execute(f"SELECT count(*) FROM '{out}'").fetchone()[0]
             print(f"{name}: {n} rows -> {out} (1 file)")
             continue
-        con.execute(f"CREATE OR REPLACE TABLE amp AS SELECT * FROM ({q}) ORDER BY 1")
+        # the row number is stored once, so the chunks below are disjoint
+        # and cover every row whatever order DuckDB scans the table in
+        key = con.execute(f"SELECT * FROM ({q}) LIMIT 0").description[0][0]
+        con.execute(f"CREATE OR REPLACE TABLE amp AS SELECT *, row_number() OVER (ORDER BY {key}) AS _rn FROM ({q})")
         n = con.execute("SELECT count(*) FROM amp").fetchone()[0]
         chunk = -(-n // N_FILES)
         os.makedirs(out, exist_ok=True)
         for i in range(N_FILES):
             lo = i * chunk
             con.execute(
-                f"COPY (SELECT * EXCLUDE (_rn) FROM"
-                f" (SELECT *, row_number() OVER () AS _rn FROM amp)"
-                f" WHERE _rn > {lo} AND _rn <= {lo + chunk} ORDER BY _rn)"
+                f"COPY (SELECT * EXCLUDE (_rn) FROM amp WHERE _rn > {lo} AND _rn <= {lo + chunk} ORDER BY _rn)"
                 f" TO '{out}/part-{i:05d}.parquet' (FORMAT PARQUET)"
             )
         print(f"{name}: {n} rows -> {out} ({N_FILES} files)")

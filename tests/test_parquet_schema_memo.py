@@ -88,8 +88,8 @@ def test_directory_with_a_new_file_is_inferred_again(spark, tmp_path):
 @pytest.mark.parametrize("unit", ["us", "ns"])
 def test_events_ts_type_is_stable_across_reads(spark, tmp_path, unit):
     """``events.ts`` is a session timestamp on the first and every later
-    read, for microsecond and nanosecond parquet timestamps (the nanosecond
-    one takes load_table's nanos-as-long path)."""
+    read, for microsecond and nanosecond parquet timestamps, and reading
+    leaves the session's nanos-as-long setting as it was."""
     base = 1_700_000_000_123_456_789
     ts = [base + i * 1_000_001_001 for i in range(5)]
     if unit == "us":
@@ -100,16 +100,26 @@ def test_events_ts_type_is_stable_across_reads(spark, tmp_path, unit):
     )
     key = "spark.sql.legacy.parquet.nanosAsLong"
     before = spark.conf.get(key)
-    try:
-        reads = [load_table(spark, str(tmp_path), "events") for _ in range(3)]
-        types = [df.schema["ts"].dataType.simpleString() for df in reads]
-        assert types == ["timestamp"] * 3
-        rows = [sorted(df.collect()) for df in reads]
-        assert rows[0] == rows[1] == rows[2]
-        _, jobs = _jobs(spark, f"memo-events-{unit}", lambda: load_table(spark, str(tmp_path), "events"))
-        assert jobs == 0
-    finally:
-        spark.conf.set(key, before)
+    reads = [load_table(spark, str(tmp_path), "events") for _ in range(3)]
+    types = [df.schema["ts"].dataType.simpleString() for df in reads]
+    assert types == ["timestamp"] * 3
+    rows = [sorted(df.collect()) for df in reads]
+    assert rows[0] == rows[1] == rows[2]
+    _, jobs = _jobs(spark, f"memo-events-{unit}", lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == 0
+    assert spark.conf.get(key) == before
+
+
+def test_load_missing_table_raises_and_keeps_session_settings(spark, tmp_path):
+    """A table that is not there raises Spark's error and changes no
+    session setting."""
+    from pyspark.errors import AnalysisException
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    with pytest.raises(AnalysisException):
+        load_table(spark, str(tmp_path), "nope")
+    assert spark.conf.get(key) == before
 
 
 def test_reloaded_ivf_index_keeps_schema_and_partition_pruning(spark, tmp_path):

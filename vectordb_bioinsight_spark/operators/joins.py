@@ -63,29 +63,6 @@ def broadcast_lookup(
     return out
 
 
-def membership_flags(
-    fact: DataFrame,
-    key: str,
-    sets: dict[str, DataFrame],
-) -> DataFrame:
-    """J3: set-membership flags against N dimension tables in one pass.
-
-    Reference: COSMIC/OncoKB/TME membership (agent4_validation.py:98-129).
-    Instead of N semi-joins (N shuffles), union the dimensions into one
-    ``(key, source)`` table, broadcast it, and pivot flags out of a single
-    left join — one broadcast join total.
-    """
-    tagged = None
-    for name, dim in sets.items():
-        t = dim.select(F.col(dim.columns[0]).alias(key)).withColumn("_src", F.lit(name))
-        tagged = t if tagged is None else tagged.unionByName(t)
-    flags = tagged.groupBy(key).agg(F.collect_set("_src").alias("_srcs"))
-    out = fact.join(F.broadcast(flags), key, "left")
-    for name in sets:
-        out = out.withColumn(f"in_{name}", F.coalesce(F.array_contains("_srcs", name), F.lit(False)))
-    return out.drop("_srcs")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -44,22 +44,6 @@ def attach_payload(df: DataFrame, id_col: str, text_col: str, kind: str = "text"
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real image decode — requires PIL, which this environment does not
-    ship. The signature and error contract are the engine spec; executors
-    with PIL installed get the real path."""
-    try:
-        from PIL import Image  # type: ignore[import-not-found]
-        import io
-
-        return Image.open(io.BytesIO(payload))
-    except ImportError as exc:  # pragma: no cover - exercised only with PIL
-        raise NotImplementedError(
-            "image decode requires PIL on executors; install pillow or use "
-            "fake_feature for deterministic plumbing tests"
-        ) from exc
-
-
 def fake_feature(payload: bytes, dim: int) -> list[float]:
     """Deterministic stand-in for a learned embedding: byte i of md5(payload)
     scaled to [0, 1]. Stable across engines/runs, so the whole mapInPandas

@@ -46,10 +46,6 @@ def dedup_exact(df: DataFrame, subset: Sequence[str]) -> DataFrame:
     return df.groupBy(*subset).agg(*agg)
 
 
-def count_distinct_exact(df: DataFrame, cols: Sequence[str], alias: str = "n_distinct") -> DataFrame:
-    return df.agg(F.countDistinct(*[F.col(c) for c in cols]).alias(alias))
-
-
 def conditional_counts(df: DataFrame, group_cols: Sequence[str], conditions: dict[str, Column]) -> DataFrame:
     """A12: ``sum(when(cond, 1))`` conditional aggregation — one shuffle for
     any number of flags (agent4_validation.py:540-546)."""

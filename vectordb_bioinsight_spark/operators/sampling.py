@@ -173,13 +173,6 @@ def perplexity_bucket_select(
     )
 
 
-def portable_hash_bucket_duckdb(expr: str, salt: int = 0) -> str:
-    """DuckDB SQL computing the same bucket as ``_bucket`` (for oracles)."""
-    from vectordb_bioinsight_spark.functions.hashing import salted_hash64_duckdb
-
-    return f"(({salted_hash64_duckdb(expr, salt)}) % {DENOM} + {DENOM}) % {DENOM}"
-
-
 def quality_quota(
     df: DataFrame,
     group_col: str,

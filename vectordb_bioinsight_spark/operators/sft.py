@@ -50,7 +50,7 @@ def render_chat(
     """
     # concat + length arithmetic, NOT format_string: the Formatter-based
     # expression is an order of magnitude slower per row than concat and
-    # this runs twice per turn (probe: scripts/probe_sft_scale.py)
+    # this runs twice per turn (measured: SCALING.md rule 32)
     open_len = F.length(F.col(role_col)) + F.lit(4)  # len('<|') + len('|>')
     frag_len = open_len + F.length(text_col) + F.lit(len(TURN_CLOSE))
     w = (

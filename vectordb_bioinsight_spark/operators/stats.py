@@ -215,30 +215,6 @@ def bh_adjust_scaled(
     return ranked.mapInPandas(_rev_cummin, schema=StructType(out_fields))
 
 
-def log2fc_by_group(
-    df: DataFrame,
-    key_cols: list[str],
-    group_col: str,
-    value_col: str,
-    group_a: str,
-    group_b: str,
-    pseudocount: float = 1.0,
-) -> DataFrame:
-    """A1: per-key group means + log2((mean_a+pc)/(mean_b+pc))
-    (agent1_deg.py:347-390). Output (key..., mean_a, mean_b, log2fc)."""
-    from vectordb_bioinsight_spark.functions.stats import log2_fold_change
-
-    v = F.col(value_col).cast("double")
-    return (
-        df.groupBy(*key_cols)
-        .agg(
-            F.avg(F.when(F.col(group_col) == group_a, v)).alias("mean_a"),
-            F.avg(F.when(F.col(group_col) == group_b, v)).alias("mean_b"),
-        )
-        .withColumn("log2fc", log2_fold_change(F.col("mean_a"), F.col("mean_b"), pseudocount))
-    )
-
-
 def cpm_normalize(
     df: DataFrame,
     sample_col: str,

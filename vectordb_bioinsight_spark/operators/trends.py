@@ -39,11 +39,6 @@ def keyword_frequencies(
     )
 
 
-def histogram_by_bucket(df: DataFrame, bucket: Column, name: str = "bucket") -> DataFrame:
-    """A6: counts per bucket (papers-per-year / events-per-day)."""
-    return df.groupBy(bucket.alias(name)).agg(F.count("*").cast("long").alias("n"))
-
-
 def trend_classification(
     df: DataFrame,
     key_col: str,

@@ -29,18 +29,6 @@ def rank_rows(
     return df.withColumn(rank_col, F.row_number().over(w))
 
 
-def flag_top_per_group(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    k: int,
-    flag_col: str = "is_top",
-) -> DataFrame:
-    """W4: flag first k rows per group (hub flag, agent2_network.py:286-290)."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(flag_col, (F.row_number().over(w) <= k))
-
-
 def max_normalize(df: DataFrame, cols: Sequence[str], suffix: str = "_norm") -> DataFrame:
     """W5: normalize columns by their global max (agent2_network.py:270-284).
 

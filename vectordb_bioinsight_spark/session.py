@@ -107,10 +107,11 @@ def get_session(app_name: str = "vectordb_bioinsight_spark", cpus: int | None = 
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         # no per-call origin capture: with it on, every DataFrame/Column API
         # call walks the Python stack and makes ~4 extra py4j round trips to
-        # record its file:line (building bm25_topk's Column-API plan took
-        # 1,448 round trips with it, 328 without). What is lost: PySpark
-        # errors no longer carry the Python file:line DataFrame query
-        # context; the SQL text fragment and the JVM stack remain.
+        # record its file:line (building a 3-term BM25 top-k plan composed
+        # through the Column API took 1,448 round trips with it, 328
+        # without). What is lost: PySpark errors no longer carry the Python
+        # file:line DataFrame query context; the SQL text fragment and the
+        # JVM stack remain.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -38,6 +38,7 @@ import threading
 from collections import OrderedDict
 from urllib.parse import urlsplit
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -106,7 +107,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
     On a memo hit the read is ``spark.read.schema(schema).parquet(path)``:
     the same columns, types and partition columns, without the
-    footer-reading job."""
+    footer-reading job. TIMESTAMP(NANOS) columns, which Spark has no type
+    for, are read as bigint nanoseconds (:func:`_nanos_as_long_schema`)."""
     scheme = urlsplit(path).scheme
     if scheme not in ("", "file"):
         return spark.read.parquet(path)
@@ -123,13 +125,31 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
             _schema_memo.move_to_end(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        df = spark.read.schema(_nanos_as_long_schema(spark, path)).parquet(path)
     with _schema_memo_lock:
         _schema_memo[key] = (fingerprint, df.schema)
         _schema_memo.move_to_end(key)
         while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
             _schema_memo.popitem(last=False)
     return df
+
+
+def _nanos_as_long_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of ``path`` with TIMESTAMP(NANOS) columns as bigint
+    nanoseconds, a parquet type Spark infers only under
+    ``spark.sql.legacy.parquet.nanosAsLong``. It is inferred in a new session
+    that shares the SparkContext, so ``spark``'s settings stay as they are;
+    a read with this schema needs no setting."""
+    child = spark.newSession()
+    for conf in _INFERENCE_CONFS:
+        child.conf.set(conf, spark.conf.get(conf))
+    child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return child.read.parquet(path).schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -143,28 +163,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     table rewritten between the fingerprint check and Spark's listing is
     read once with the schema of the version checked.
 
-    The ``events`` table carries TIMESTAMP(NANOS) — a parquet type Spark's
-    vectorized reader rejects. We read nanos as long (legacy conf) and rebuild
-    a microsecond timestamp JVM-side: ``timestamp_micros(ns div 1000)``,
-    matching DuckDB's TIMESTAMP_NS -> TIMESTAMP cast (floor to micros).
+    ``events.ts`` is made a session timestamp. A ``timestamp_ntz`` column
+    (a parquet timestamp not adjusted to UTC) is cast. A TIMESTAMP(NANOS)
+    column arrives as bigint nanoseconds (:func:`read_parquet`) and is
+    rebuilt JVM-side as ``timestamp_micros(ns div 1000)``, matching DuckDB's
+    TIMESTAMP_NS -> TIMESTAMP cast (floor to micros). No session setting is
+    changed; a missing or unreadable table raises Spark's error.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = None
-    try:
-        df = read_parquet(spark, path)
-        _ = df.schema  # force schema resolution to surface nanos errors
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = read_parquet(spark, path)
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for field in df.schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             # integer `div` — float division would lose precision above 2^53 ns
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif field.name == "ts" and field.dataType.simpleString() == "timestamp_ntz":
-            # newer Spark reads TIMESTAMP(NANOS) natively as NTZ (micros
-            # truncation, same as the DuckDB cast); align to the session-UTC
-            # instant type so time arithmetic (unix_micros etc.) type-checks
-            # identically on every Spark version
+            # align to the session-UTC instant type so time arithmetic
+            # (unix_micros etc.) type-checks identically on every Spark version
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 

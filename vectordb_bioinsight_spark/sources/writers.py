@@ -1,4 +1,4 @@
-"""Sinks — SURVEY §2.1 S10 (CSV), S13 (JSON), plus the parquet table
+"""Sinks — SURVEY §2.1 S10 (CSV), plus the parquet table
 contract that replaces the reference's inter-agent CSV files
 (orchestrator.py:168-184, base_agent.py:114-139).
 
@@ -41,11 +41,6 @@ def write_table(
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
     """S10 CSV sink (base_agent.py:114-119)."""
     df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S13 JSON sink (base_agent.py:133-139)."""
-    df.write.mode(mode).json(path)
 
 
 def write_bucketed_table(
